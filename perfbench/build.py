@@ -5,7 +5,8 @@ benchmark harness (perfbench/src) into one class directory.
 Uses the Scala compiler that ships in Spark's jars ($SPARK_HOME/jars), the
 same jars the engine runs on, so the build needs no network and no sbt.
 The output lives under .bench_build/ and is keyed by a hash of every
-source file, so an unchanged tree is not rebuilt.
+source file, so an unchanged tree is not rebuilt; builds of other trees
+are kept, so switching between two trees does not rebuild either.
 
 Usage: python3 perfbench/build.py    (prints the class directory)
 """
@@ -58,9 +59,6 @@ def build() -> Path:
     r = subprocess.run(cmd, stdout=sys.stderr, stderr=sys.stderr)
     if r.returncode != 0:
         sys.exit(f"build: scalac failed with code {r.returncode}")
-    for old in OUT.glob("classes-*"):
-        if old != tmp:
-            shutil.rmtree(old, ignore_errors=True)
     tmp.rename(classes)
     (classes / ".done").touch()
     return classes

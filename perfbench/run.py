@@ -20,7 +20,6 @@ import hashlib
 import json
 import os
 import shutil
-import statistics
 import subprocess
 import sys
 import time
@@ -35,17 +34,15 @@ import gen_tables  # noqa: E402
 
 WORKLOADS = ("crawl", "analytics")
 ANALYTICS_SCALE = {False: 0.01, True: 0.002}
-# the generator takes ~0.1 CPU-s: five repetitions steady its median
-SETUP_REPS = {False: 5, True: 1}
 RUN_LIMIT_S = 170
 EXPECTED = BENCH / "expected_queries.json"
 # Oracle SQL of these queries is a VALUES list pinned to the 500-document
-# sf0.01 correctness tables; on generated data their expected rows are the
-# recorded ones in expected_queries.json instead.
-DATA_PINNED = {"q_dedup_simhash", "q_sentiment_buckets",
-               "q_summary_containment", "q_text_fingerprint"}
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
+# sf0.01 correctness tables. On generated data the expected rows of the
+# first three are recomputed from documents.parquet by an implementation
+# independent of the engine (tools/golden_recompute.py); the last one's
+# are recorded from the engine.
+RECOMPUTED = {"q_dedup_simhash", "q_sentiment_buckets", "q_text_fingerprint"}
+DATA_PINNED = RECOMPUTED | {"q_summary_containment"}
 ADD_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke",
              "java.base/java.lang.reflect", "java.base/java.io",
              "java.base/java.net", "java.base/java.nio", "java.base/java.util",
@@ -72,17 +69,6 @@ def heap_size():
     except (OSError, StopIteration, ValueError):
         g = 2
     return f"{min(8, max(2, g))}g"
-
-
-def gen_data(data, scale, reps):
-    """Make the tables `reps` times; (wall s, CPU s) of each."""
-    times = []
-    for _ in range(reps):
-        shutil.rmtree(data, ignore_errors=True)
-        t0, c0 = time.perf_counter(), time.process_time()
-        gen_tables.generate(str(data), scale, 42)
-        times.append((time.perf_counter() - t0, time.process_time() - c0))
-    return times
 
 
 def run_jvm(classes, args, work, env_extra, deadline):
@@ -128,8 +114,10 @@ def canon(v):
 def digest(con, sql):
     """(row count, order-insensitive hash of the rows, columns by name)."""
     cur = con.execute(sql)
-    names = [d[0] for d in cur.description]
-    rows = cur.fetchall()
+    return digest_rows([d[0] for d in cur.description], cur.fetchall())
+
+
+def digest_rows(names, rows):
     order = sorted(range(len(names)), key=lambda i: names[i])
     lines = sorted("\x1f".join(canon(r[i]) for i in order) for r in rows)
     h = hashlib.sha256(("\x1e".join(sorted(names)) + "\n" +
@@ -141,9 +129,11 @@ def check_queries(data, out, ran, skip, scale_key, record):
     """Compare each query's output (row count + order-insensitive
     hash) with expected_queries.json. Expected values of SQL-expressible
     queries were computed by DuckDB running the query's oracle SQL on the
-    same generated tables; the rest were recorded from the engine. With
+    same generated tables, three were recomputed independently of the
+    engine, and the remaining one was recorded from the engine. With
     `record` the expected values are recomputed and stored instead (DuckDB
-    must agree with the engine on every oracle-backed query)."""
+    must agree with the engine on every oracle-backed or recomputed
+    query)."""
     import duckdb
     con = duckdb.connect()
     expected = json.loads(EXPECTED.read_text()) if EXPECTED.exists() else {}
@@ -166,19 +156,39 @@ def check_queries(data, out, ran, skip, scale_key, record):
     return failures
 
 
+def recompute(data):
+    """Expected rows of the RECOMPUTED queries, from documents.parquet."""
+    import pyarrow.parquet as pq
+    sys.path.insert(0, str(ROOT / "tools"))
+    import golden_recompute as gr
+    docs = pq.read_table(data / "documents.parquet",
+                         columns=["doc_id", "text"]).to_pydict()
+    pairs = list(zip(docs["doc_id"], docs["text"]))
+    return {
+        "q_sentiment_buckets": digest_rows(["label", "cnt", "score_milli_sum"],
+                                           gr.sentiment_buckets(docs["text"])),
+        "q_text_fingerprint": digest_rows(["doc_id", "fp"], gr.fingerprints(pairs)),
+        "q_dedup_simhash": digest_rows(["id_a", "id_b", "hamming"],
+                                       gr.simhash_pairs(pairs)),
+    }
+
+
 def record_expected(con, data, out, got_all, expected, scale_key):
     oracle = json.loads((out / "oracle_sql.json").read_text())
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data / t}.parquet'")
+    for t in data.glob("*.parquet"):
+        con.execute(f"CREATE VIEW {t.stem} AS SELECT * FROM '{t}'")
+    recomputed = recompute(data)
     rec, failures = {}, []
     for q, got in sorted(got_all.items()):
-        if q in oracle and q not in DATA_PINNED:
-            want = digest(con, oracle[q])
-            if want != got:
-                failures.append(f"{q}: engine {got} != duckdb {want}")
-            rec[q] = {"rows": want[0], "hash": want[1], "source": "duckdb"}
+        if q in RECOMPUTED:
+            want, source = recomputed[q], "recompute"
+        elif q in oracle and q not in DATA_PINNED:
+            want, source = digest(con, oracle[q]), "duckdb"
         else:
-            rec[q] = {"rows": got[0], "hash": got[1], "source": "engine"}
+            want, source = got, "engine"
+        if want != got:
+            failures.append(f"{q}: engine {got} != {source} {want}")
+        rec[q] = {"rows": want[0], "hash": want[1], "source": source}
     if not failures:
         expected[scale_key] = rec
         EXPECTED.write_text(json.dumps(expected, indent=1, sort_keys=True) + "\n")
@@ -190,29 +200,12 @@ def fmt(v):
     return "null" if v is None else f"{v:.6g}" if isinstance(v, float) else str(v)
 
 
-# Names the crawl and query sides use for the figures a run reports:
-# (name, key, unit).
-REPORT_NAMES = {
-    "crawl": [("crawl_pps", "throughput", "pages/s"), ("crawl_s", "pass_s", "s"),
-              ("crawl_cpu_s", "pass_cpu_s", "CPU-s"),
-              ("round_s.p50", "step_s.p50", "s"),
-              ("resume_s", "resume_s", "s"), ("warehouse_mb", "warehouse_mb", "MB")],
-    "analytics": [("query_total_s", "pass_s", "s"),
-                  ("query_s.p50", "step_s.p50", "s"), ("query_s.p75", "step_s.p75", "s"),
-                  ("query_cpu_s", "pass_cpu_s", "CPU-s")],
-}
-COMMON_NAMES = [("live_heap_mb", "live_heap_mb", "MB"),
-                ("peak_heap_mb", "peak_heap_after_gc_mb", "MB"),
-                ("setup_s", "setup_s", "CPU-s"), ("setup_wall_s", "setup_wall_s", "s")]
-
-
 def report(res, wl, metrics, attempted, failed, failures, spans):
-    """Human-readable lines: every figure under its crawl or query name."""
-    figures = {**res["e2e"], **res["extra"]}
+    """Human-readable lines: the pass's figures under the names the
+    workload gives them, fail_ratio with its base, the run's context."""
     lines = [f"== {wl} seed={res['seed']} trace={int(res['trace'])}"]
-    for label, key, unit in REPORT_NAMES[wl] + COMMON_NAMES:
-        if key in figures:
-            lines.append(f"  {label:<16} {fmt(figures[key]):>12} {unit}")
+    lines += [f"  {f['name']:<16} {fmt(f['value']):>12} {f['unit']}"
+              for f in res["figures"]]
     lines.append(f"  {'fail_ratio':<16} {fmt(failed / attempted):>12} ratio "
                  f"({failed} failed of {attempted} attempted ops)")
     lines += [f"  FAILED: {f}" for f in failures[:20]]
@@ -245,10 +238,11 @@ def main():
                     help="store the analytics outputs as the recorded expected values")
     a = ap.parse_args()
     start = time.monotonic()
-    deadline = start + RUN_LIMIT_S
 
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     classes = build.build()
+    # the first run in a checkout builds; the run limit starts after that
+    deadline = time.monotonic() + RUN_LIMIT_S
     base = ROOT / ".bench_build"
     work = base / "work" / f"{a.workload}-{a.seed}-{os.getpid()}"
     shutil.rmtree(work, ignore_errors=True)
@@ -261,10 +255,9 @@ def main():
             args.append("--smoke")
         if a.inject_failure:
             args.append("--inject-failure")
-        setup_times = []
         if a.workload == "analytics":
             data = work / "data"
-            setup_times = gen_data(data, ANALYTICS_SCALE[a.smoke], SETUP_REPS[a.smoke])
+            gen_tables.generate(str(data), ANALYTICS_SCALE[a.smoke], 42)
             args += ["--data", str(data)]
         crawl = a.workload == "crawl"
         log(f"inputs ready at {time.monotonic() - start:.1f} s")
@@ -274,7 +267,7 @@ def main():
             log(f"benchmark JVM failed (exit {code}); no result")
             return 1
         res = json.loads((work / "result.json").read_text())
-        for k in ("e2e", "extra", "layers"):  # empty objects arrive as []
+        for k in ("e2e", "layers"):  # empty objects arrive as []
             res[k] = res[k] or {}
         failures = list(res["failures"])
         attempted, failed = res["attempted"], res["failed"]
@@ -285,9 +278,6 @@ def main():
                                 str(ANALYTICS_SCALE[a.smoke]), a.record)
             failures += chk
             failed += len(chk)
-            if not a.trace:
-                res["e2e"]["setup_wall_s"] = statistics.median(t[0] for t in setup_times)
-                res["e2e"]["setup_s"] = statistics.median(t[1] for t in setup_times)
 
         units = {m["name"]: m["unit"] for m in
                  spec["per_layer" if a.trace else "end_to_end"]}

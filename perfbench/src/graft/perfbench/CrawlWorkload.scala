@@ -55,10 +55,7 @@ final class CrawlWorkload(spark: SparkSession, val name: String,
     * pass, on first use. */
   private lazy val (simDigest, simPerRound) = expectFromSimulator()
 
-  def setupOnce(): Boolean = {
-    CorpusWriter.write(spark, spec, pagesPath)
-    true
-  }
+  def setupOnce(): Unit = CorpusWriter.write(spark, spec, pagesPath)
 
   private def expectFromSimulator(): ((Long, Long), Seq[Long]) = {
     val s0 = Clock.nowUs
@@ -109,7 +106,7 @@ final class CrawlWorkload(spark: SparkSession, val name: String,
     }
     val failures = outcome match {
       case Left(msg) => Seq(msg)
-      case Right((first, Some(fin))) => check(wh, first, fin)
+      case Right((first, Some(fin))) => check(wh, first, fin).toSeq
       case Right(_) => Nil
     }
     val fetched = outcome.toOption.map { case (f, s) =>
@@ -118,11 +115,17 @@ final class CrawlWorkload(spark: SparkSession, val name: String,
     val resumeS = for {
       (_, Some(_)) <- outcome.toOption
       commit <- commits.lift(shape.stopRound + 1)
-    } yield "resume_s" -> (commit - resumeCall) / 1e6
-    val extra = Map("warehouse_mb" -> CrawlWorkload.dirBytes(Paths.get(wh)) / 1e6) ++
-      resumeS
+    } yield Figure("resume_s", (commit - resumeCall) / 1e6, "s")
+    val wallS = (t1 - t0) / 1e6
+    val figures = Seq(
+      Figure("crawl_pps", fetched / wallS, "pages/s"),
+      Figure("crawl_s", wallS, "s"),
+      Figure("crawl_cpu_s", cpuS, "CPU-s"),
+      Figure("round_s.p50", Stats.median(steps.filter(_.counted).map(_.durS)), "s")) ++
+      resumeS :+
+      Figure("warehouse_mb", CrawlWorkload.dirBytes(Paths.get(wh)) / 1e6, "MB")
     if (idx > 0) deleteTree(Paths.get(wh))
-    PassOut(s"crawl.$idx", t0, t1, cpuS, steps, fetched, 1, failures, extra)
+    PassOut(s"crawl.$idx", t0, t1, cpuS, steps, fetched, 1, failures, figures)
   }
 
   /** Manifest commit times (file modification time of each round's
@@ -135,9 +138,10 @@ final class CrawlWorkload(spark: SparkSession, val name: String,
         .to(TimeUnit.MICROSECONDS))
     }
 
-  /** Drained, same per-round fetch counts, same seen set as the simulator. */
+  /** Drained, same per-round fetch counts, same seen set as the simulator;
+    * what differs, in one message (the crawl is one op). */
   private def check(wh: String, first: CrawlLoop.CrawlSummary,
-                    fin: CrawlLoop.CrawlSummary): Seq[String] = {
+                    fin: CrawlLoop.CrawlSummary): Option[String] = {
     val out = Seq.newBuilder[String]
     if (fin.pendingAfter != 0)
       out += s"crawl did not drain: ${fin.pendingAfter} pending after ${fin.rounds} rounds"
@@ -154,7 +158,7 @@ final class CrawlWorkload(spark: SparkSession, val name: String,
     val d = CrawlWorkload.digest(rows.iterator.map(r => (r.getLong(0), r.getLong(1))))
     if (d != simDigest)
       out += s"seen-set digest $d differs from the simulator's $simDigest"
-    out.result()
+    Some(out.result()).filter(_.nonEmpty).map(_.mkString("; "))
   }
 
   def layerFigures: Seq[(String, Double)] = {

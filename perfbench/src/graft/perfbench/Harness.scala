@@ -10,22 +10,28 @@ final case class Step(name: String, startUs: Long, endUs: Long,
   def durS: Double = (endUs - startUs) / 1e6
 }
 
-/** One timed, closed-loop operation of a workload (one drained crawl, or
-  * one pass over the query catalog). `units` is the work it completed:
-  * pages fetched for crawls, queries run for analytics. `extra` carries
-  * workload-specific end-to-end figures (resume time, warehouse size). */
+/** One end-to-end figure of a pass, under the name the workload's side
+  * uses for it (`crawl_pps`, `query_total_s`, ...). */
+final case class Figure(name: String, value: Double, unit: String) {
+  def fields: Seq[(String, Any)] = Seq("name" -> name, "value" -> value, "unit" -> unit)
+}
+
+/** One timed, closed-loop pass of a workload (one drained crawl, or one
+  * pass over the query catalog). `units` is the work it completed: pages
+  * fetched for crawls, queries run for analytics. `attempted` counts its
+  * ops (one crawl, or one per query); `failures` holds one message per
+  * failed op. */
 final case class PassOut(name: String, startUs: Long, endUs: Long,
                          cpuS: Double, steps: Seq[Step], units: Long,
                          attempted: Int, failures: Seq[String],
-                         extra: Map[String, Double] = Map.empty) {
+                         figures: Seq[Figure]) {
   def wallS: Double = (endUs - startUs) / 1e6
 }
 
 trait Workload {
   def name: String
-  /** One repetition of the input set-up; false when the inputs are made
-    * outside the JVM (then the caller times the set-up). */
-  def setupOnce(): Boolean
+  /** One repetition of the input set-up, run and timed in the JVM. */
+  def setupOnce(): Unit
   /** Untimed preparation after set-up (no timed operation may run). */
   def prepare(): Unit = ()
   /** The timed pass (`idx` 0) is the workload's first execution in the
@@ -33,7 +39,7 @@ trait Workload {
     * for the tracing overhead. */
   def pass(idx: Int): PassOut
   /** Extra operations that must fail (the forced-failure self-check), run
-    * after the timed pass; returns (attempted, failures). */
+    * after the timed pass; returns (attempted, one message per failed op). */
   def injectFailures(): (Int, Seq[String])
   /** Isolated, timed calls into single layers (traced runs only). */
   def probes(tracer: Tracer, parent: Int): Seq[(String, Any)]
@@ -68,13 +74,13 @@ object Harness {
 
     // (wall s, CPU s) of each set-up repetition
     val setupReps = if (o.smoke) 1 else 3
-    val setupTimes = (1 to setupReps).flatMap { i =>
+    val setupTimes = (1 to setupReps).map { i =>
       val (s0, c0) = (Clock.nowUs, Clock.processCpuS)
-      val inJvm = wl.setupOnce()
+      wl.setupOnce()
       val (wall, cpu) = ((Clock.nowUs - s0) / 1e6, Clock.processCpuS - c0)
       tracer.add(root, s"setup.$i", s0, Clock.nowUs)
-      if (inJvm) Log(f"setup $i: $wall%.2f s, $cpu%.2f CPU-s")
-      if (inJvm) Some((wall, cpu)) else None
+      Log(f"setup $i: $wall%.2f s, $cpu%.2f CPU-s")
+      (wall, cpu)
     }
     val w0 = Clock.nowUs
     wl.prepare()
@@ -83,6 +89,8 @@ object Harness {
 
     val heap = new HeapWatch
     var retainedMb = Double.NaN
+    // JIT compilation and GC seconds during the timed pass
+    var jitS, gcS = Double.NaN
     val load0 = Machine.loadAvg()
     val cpu0 = Machine.cpuTimes()
     val passes = (0 until (if (o.trace) 4 else 1)).map { idx =>
@@ -92,8 +100,12 @@ object Harness {
         Some(r)
       } else None
       heap.active = idx == 0
+      val (jit0, gc0) = Machine.jvmTimes()
       val p = try wl.pass(idx) finally heap.active = false
       if (idx == 0) {
+        val (jit1, gc1) = Machine.jvmTimes()
+        jitS = jit1 - jit0
+        gcS = gc1 - gc0
         attempted += p.attempted
         failures ++= p.failures
         retainedMb = HeapWatch.afterFullGcMb()
@@ -118,7 +130,6 @@ object Harness {
     }
 
     val timed = passes.head._1
-    val counted = timed.steps.filter(_.counted)
     val fails = failures.result()
     // The bounded end-to-end metrics are CPU seconds (the pass, the set-up):
     // on a shared VM, CPU steal moves wall time by tens of percent between
@@ -127,14 +138,14 @@ object Harness {
       if (o.trace) Nil
       else Seq(
         "pass_cpu_s" -> timed.cpuS,
-        "setup_s" -> Stats.median(setupTimes.map(_._2)),
-        "pass_s" -> timed.wallS,
-        "throughput" -> timed.units / timed.wallS,
-        "step_s.p50" -> Stats.quantile(counted.map(_.durS), 0.5),
-        "step_s.p75" -> Stats.quantile(counted.map(_.durS), 0.75),
-        "setup_wall_s" -> Stats.median(setupTimes.map(_._1)),
-        "live_heap_mb" -> retainedMb,
-        "peak_heap_after_gc_mb" -> heap.peakMb)
+        "setup_s" -> Stats.median(setupTimes.map(_._2)))
+    val figures = timed.figures ++ Seq(
+      Figure("setup_s", Stats.median(setupTimes.map(_._2)), "s"),
+      Figure("setup_wall_s", Stats.median(setupTimes.map(_._1)), "s"),
+      Figure("live_heap_mb", retainedMb, "MB"),
+      Figure("peak_heap_mb", heap.peakMb, "MB"),
+      Figure("jit_s", jitS, "s"),
+      Figure("gc_s", gcS, "s"))
 
     val layers: Seq[(String, Any)] = passes.head._2 match {
       case None => Nil
@@ -151,6 +162,8 @@ object Harness {
           "spark.spill_mb" -> t.exec.spillMb,
           "spark.input_rows" -> t.exec.inputRows.toDouble,
           "spark.task_failures" -> t.exec.failedTasks.toDouble,
+          "jvm.jit_s" -> jitS,
+          "jvm.gc_s" -> gcS,
           "trace.overhead_s" -> (passes(2)._1.wallS -
             (passes(1)._1.wallS + passes(3)._1.wallS) / 2),
           "trace.cold_pass_s" -> timed.wallS,
@@ -172,11 +185,11 @@ object Harness {
       "failures" -> fails.take(50),
       "setup_reps" -> setupTimes.map { case (w, c) => Seq("wall_s" -> w, "cpu_s" -> c) },
       "e2e" -> e2e,
-      "extra" -> timed.extra.toSeq,
+      "figures" -> figures.map(_.fields),
       "layers" -> layers,
       "passes" -> passes.map { case (p, _) => Seq("pass" -> p.name,
         "wall_s" -> p.wallS, "cpu_s" -> p.cpuS, "units" -> p.units,
-        "steps" -> p.steps.size) ++ p.extra.toSeq },
+        "steps" -> p.steps.size) },
       "context" -> context) ++
       passes.head._2.toSeq.flatMap { case (rep, t) =>
         Seq("traced_pass" -> (t.fields ++ rep), "probes" -> probeOut)

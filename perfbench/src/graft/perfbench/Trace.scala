@@ -271,7 +271,8 @@ object HeapWatch {
 }
 
 /** Machine context across the timed region: nproc, load average and the
-  * share of CPU time lost to steal and iowait (from /proc/stat). */
+  * share of CPU time lost to steal and iowait (from /proc/stat); and the
+  * JVM's own JIT and GC time. */
 object Machine {
   final case class CpuTimes(total: Long, iowait: Long, steal: Long)
 
@@ -286,6 +287,13 @@ object Machine {
     scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split("\\s+")
       .take(3).map(_.toDouble).toSeq
   } catch { case _: Throwable => Nil }
+
+  /** Seconds the JVM has spent so far in JIT compilation and in garbage
+    * collections: work beside the program's own that its process CPU
+    * time includes. */
+  def jvmTimes(): (Double, Double) = (
+    ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3,
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3)
 
   def context(from: Option[CpuTimes], to: Option[CpuTimes],
               loadBefore: Seq[Double]): Seq[(String, Any)] = {
